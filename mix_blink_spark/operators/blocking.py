@@ -175,7 +175,6 @@ def candidate_pairs(
     neighborhood: int = 8,
     sizes: DataFrame | None = None,
     caches: list | None = None,
-    dedup: bool = True,
 ) -> DataFrame:
     """Self-join within each blocking key → deduped (a, b) candidate pairs.
 
@@ -242,15 +241,7 @@ def candidate_pairs(
     )
 
     pairs = small_pairs.select("a", "b", "norm_a", "norm_b").unionByName(big_pairs)
-    # ``dedup=False`` skips the global per-(a, b) dropDuplicates — a full
-    # shuffle of the whole pair set. A pair that shares k blocking keys
-    # (k token keys + minhash bands + family overlap) comes out k times;
-    # duplicates score identically, so any caller that collapses pairs
-    # downstream (the pipeline's edge set is distinct()ed inside
-    # connected_components._canonical) trades duplicate scoring compute
-    # for the dedup exchange. Default True keeps the deduped contract
-    # (the driver-gate queries and direct callers rely on it).
-    return pairs.dropDuplicates(["a", "b"]) if dedup else pairs
+    return pairs.dropDuplicates(["a", "b"])
 
 
 def cross_family_pairs(
@@ -286,9 +277,9 @@ def cross_family_pairs(
 
     ``dedup=False`` skips the final per-(a, b, norm_b) dropDuplicates — a
     full shuffle of the largest intermediate. Correct whenever the caller
-    collapses duplicates anyway (the pipeline's top-1-per-surface window:
-    duplicate candidates score identically, so rank-1 output is
-    invariant). Default True keeps the deduped contract.
+    collapses duplicates anyway (the pipeline's top-1-per-surface
+    ``fused_me_top1``: duplicate candidates score identically, so the
+    top-1 output is invariant). Default True keeps the deduped contract.
 
     ``left_sizes``: optionally a precomputed ``block_sizes_salted`` of the
     fact-scale left side, shared with ``candidate_pairs``. Block sizes are

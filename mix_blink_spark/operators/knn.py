@@ -26,6 +26,15 @@ from pyspark.sql.window import Window
 
 from .topk import knn_broadcast
 
+# per-HOST cap on concurrent self-kNN scoring tasks in neardup_pairs: each
+# 1024-query chunk streams a ~|candidates| x 8 B score matrix (160 MB at
+# 20k candidates), so the stage is memory-bandwidth-bound, and on the
+# profiled 32-core host bandwidth collapses past ~8 concurrent streams
+# (bench membw ladder; measured at 20k x 20k: 8 tasks = 3.5 s stable,
+# 19 = 4.8-5.9 s, 32 = 1.3-7.5 s erratic). On a multi-executor cluster
+# the cap is per executor group and total concurrency grows with hosts.
+KNN_SLOTS = 8
+
 
 def _id_order(col: str = "hit_id"):
     """Tie-break ordering that matches a NUMERIC id comparison for
@@ -361,22 +370,8 @@ def embedding_neardup_pairs(
         # scheduling overhead to a sub-second job.
         qparts = None
         if n > 4096:
-            import os as _os
-
-            # per-HOST cap on concurrent scoring tasks, same physics as
-            # the scan's io_slots: each 1024-query chunk streams a
-            # ~|candidates| x 8 B score matrix (160 MB at 20k candidates),
-            # so the stage is memory-bandwidth-bound and this host's
-            # bandwidth collapses past ~8 concurrent streams (bench membw
-            # ladder; measured at 20k x 20k: 8 tasks = 3.5 s stable, 19 =
-            # 4.8-5.9 s, 32 = 1.3-7.5 s erratic). On a multi-executor
-            # cluster the cap is per executor group and total concurrency
-            # grows with hosts. 0 disables.
-            slots = int(_os.environ.get("SPARK_GRAFT_KNN_SLOTS", "8"))
             sc = data.sparkSession.sparkContext
-            qparts = min(sc.defaultParallelism, max(2, n // 1024))
-            if slots:
-                qparts = min(qparts, slots)
+            qparts = min(sc.defaultParallelism, max(2, n // 1024), KNN_SLOTS)
         hits = brute_force_topk(
             data, data, k=k, id_col=id_col, emb_col=emb_col,
             query_partitions=qparts,

@@ -82,17 +82,6 @@ class LinkConfig:
     # or make_encoder_udf(mini_transformer_batch(..)) to swap encoders
     # without touching the plan (functions/embed.py)
     encoder: object | None = None
-    # per-HOST cap on concurrent scan+extract tasks (None = no cap). The
-    # html scan+extract stage is kernel-data-path bound (page-cache reads
-    # + Arrow socket copies), and a host saturates that path well below
-    # its advertised core count — this box peaks at ~8-12 concurrent
-    # data-path tasks while pure compute scales to ~26 effective cores
-    # (bench_artifacts/{sysbisect,capacity_ladder}_r3.json; capping the
-    # stage at 12 inside local[32] measured 1.8x faster than uncapped).
-    # On a multi-executor cluster the cap is per host: each executor
-    # group applies its own budget, so total scan concurrency still grows
-    # linearly with hosts.
-    io_slots: int | None = None
     # broadcast the span table into the pages join so the heavy text
     # column never shuffles (sources/pages.mentions_from_spans) — right
     # whenever the span set fits a broadcast; the profiled 40%-sys
@@ -154,13 +143,11 @@ def build_mentions(
     spans: DataFrame,
     from_html: bool = True,
     jvm_extract: bool = False,
-    io_slots: int | None = None,
     broadcast_spans: bool = False,
 ) -> DataFrame:
     """Extract text from ``html`` (the byte-stable kernel — the pipeline's
     own text, never trusting a pre-extracted column) and slice mention
     surfaces. ``html`` is pruned immediately after extraction.
-    ``io_slots``: see LinkConfig.io_slots.
 
     ``pages`` may be a parquet PATH instead of a DataFrame: the scan then
     uses the python-direct row-group reader
@@ -188,12 +175,8 @@ def build_mentions(
         pages = read_pages_extracted_python(
             spans.sparkSession, pages, columns=("url", "lang")
         )
-        if io_slots is not None:
-            pages = pages.coalesce(io_slots)
         return mentions_from_spans(pages, spans, broadcast_spans=broadcast_spans)
     if from_html and "html" in pages.columns:
-        if io_slots is not None:
-            pages = pages.coalesce(io_slots)
         if jvm_extract:
             from ..functions.text import extract_text_jvm
 
@@ -261,7 +244,6 @@ def link(
             pages,
             spans,
             jvm_extract=cfg.jvm_extract,
-            io_slots=cfg.io_slots,
             broadcast_spans=cfg.broadcast_spans,
         ),
     )
@@ -483,18 +465,9 @@ def link(
             )
             _local["mm"] = rows
             return spark.createDataFrame(rows, _PAIRS_SCHEMA)
-        # SPARK_GRAFT_MM_DEDUP=0 (A/B knob, round-7 TODO): skip the global
-        # per-(a, b) dropDuplicates — the mm side's one remaining full
-        # shuffle of the whole pair set. Duplicate pairs score identically
-        # and the edge set is distinct()ed inside connected_components, so
-        # clusters are invariant; pairs_mm rows/histograms then count a
-        # pair once per shared blocking key, which is why the deduped
-        # contract stays the default until the A/B shows a win worth that
-        # caveat (see bench_artifacts/highvocab_r7*.json).
         p = candidate_pairs(
             s_keyed, cfg.max_block_size, cfg.neighborhood, sizes=s_sizes,
             caches=_op_caches,
-            dedup=_os.environ.get("SPARK_GRAFT_MM_DEDUP", "1") != "0",
         )
         if _os.environ.get("SPARK_GRAFT_PROFILE_PAIRGEN") == "1":
             # profiling only (off by default): materialize the candidate
@@ -529,11 +502,11 @@ def link(
             )
             _local["me"] = rows
             return spark.createDataFrame(rows, _PAIRS_SCHEMA)
-        # dedup=False: the top-1 window below already collapses duplicate
-        # (a, b, norm_b) candidates (identical rows score identically, so
-        # rank-1 output is invariant) — skipping the dropDuplicates saves
-        # a full shuffle of the largest intermediate in the pipeline
-        # (0.6-4M rows at 8k entities, round-4 profile)
+        # dedup=False: fused_me_top1's per-surface argmax already collapses
+        # duplicate (a, b, norm_b) candidates (identical rows score
+        # identically, so the top-1 output is invariant) — skipping the
+        # dropDuplicates saves a full shuffle of the largest intermediate
+        # in the pipeline (0.6-4M rows at 8k entities, round-4 profile)
         p = cross_family_pairs(
             s_keyed,
             e_keyed,
@@ -547,82 +520,45 @@ def link(
             # same generation/scoring split for the me leg (see pairs_mm)
             _tg = _time.monotonic()
             mark(f"pairs_me generation only (n={p.count()})", _tg)
+        # fused score + top-1-per-surface (round-5 verdict item 3):
+        # Levenshtein stays a JVM codegen column; dense + JW + the
+        # per-partition argmax run in ONE Arrow stage, so only each
+        # partition's per-surface winners — not every scored candidate —
+        # reach the final ranking exchange. Dense vectors come from the
+        # broadcast matrices at dimension scale, else ride the pair rows.
+        from ..functions.strsim import levenshtein_sim
+
+        p = p.withColumn("lev", levenshtein_sim(F.col("norm_a"), F.col("norm_b")))
         if use_bc:
             a_ids = {f"{r}\x00{nm}": i for i, (r, nm) in enumerate(a_rows)}
             bc_e = spark.sparkContext.broadcast((a_ids, a_mat))
-            if _os.environ.get("SPARK_GRAFT_ME_PLAN", "fused") != "window":
-                # fused score + top-1-per-surface (round-5 verdict item
-                # 3): Levenshtein stays a JVM codegen column; dense + JW
-                # + the per-partition argmax run in ONE Arrow stage, so
-                # only each partition's per-surface winners — not every
-                # scored candidate — reach the final ranking exchange.
-                # SPARK_GRAFT_ME_PLAN=window keeps the pre-fusion plan for A/B
-                # attribution only (bit-identical output, parity-gated).
-                from ..functions.strsim import levenshtein_sim
-
-                p = p.withColumn(
-                    "lev", levenshtein_sim(F.col("norm_a"), F.col("norm_b"))
-                )
-                return fused_me_top1(
-                    p, cfg.measure, cfg.dense_weight, cfg.tau_ent, bc_s, bc_e
-                )
-            dense_udf = make_broadcast_dense_udf(cfg.measure, bc_s, bc_e)
-            p = p.withColumn(
-                "dense",
-                dense_udf(F.col("a"), F.concat_ws("\x00", F.col("b"), F.col("norm_b"))),
+            return fused_me_top1(
+                p, cfg.measure, cfg.dense_weight, cfg.tau_ent, bc_s, bc_e
             )
-            scored = score_pairs(p, cfg.measure, cfg.dense_weight, dense_col="dense")
+        if store_idx is not None:
+            # vocabulary-scale reuse: the stored index stays a distributed
+            # frame (load-only here; committing an ordinal at this scale
+            # is the store builder's job) — the SAME rows e_keyed blocks
+            # on, so the join is inner over a consistent dictionary in
+            # every regime
+            alias_embs = store_idx.select(F.col("id").alias("rid"), "norm", "emb")
         else:
-            if store_idx is not None:
-                # vocabulary-scale reuse: the stored index stays a
-                # distributed frame (load-only here; committing an
-                # ordinal at this scale is the store builder's job) —
-                # the SAME rows e_keyed blocks on, so the join is inner
-                # over a consistent dictionary in every regime
-                alias_embs = store_idx.select(F.col("id").alias("rid"), "norm", "emb")
-            else:
-                # dimension-scale partitioning heuristic: each Arrow UDF
-                # task has a ~0.25 s fixed cost, so tiny alias tables
-                # encode on one partition; large dictionaries keep
-                # parallelism
-                p_ent = max(
-                    1,
-                    min(spark.sparkContext.defaultParallelism, alias_records.count() // 2000 + 1),
-                )
-                alias_embs = _with_emb(alias_records.coalesce(p_ent), enc=cfg.encoder)
-            ea = s_embs.select(F.col("rid").alias("a"), F.col("emb").alias("emb_a"))
-            eb = F.broadcast(
-                alias_embs.select(
-                    F.col("rid").alias("b"), F.col("norm").alias("norm_b"), F.col("emb").alias("emb_b")
-                )
+            # dimension-scale partitioning heuristic: each Arrow UDF task
+            # has a ~0.25 s fixed cost, so tiny alias tables encode on one
+            # partition; large dictionaries keep parallelism
+            p_ent = max(
+                1,
+                min(spark.sparkContext.defaultParallelism, alias_records.count() // 2000 + 1),
             )
-            p = p.join(ea, "a").join(eb, ["b", "norm_b"])
-            if _os.environ.get("SPARK_GRAFT_ME_PLAN", "fused") != "window":
-                # row-embedding fused reduction: at beyond-broadcast
-                # vocabulary the scored-candidate exchange the window
-                # would shuffle is the pipeline's largest intermediate —
-                # reduce to per-partition winners inside the scoring
-                # stage here too (same kernels; bit-identical output,
-                # covered by the regime-parity test at forced
-                # broadcast_dense_limit=0)
-                from ..functions.strsim import levenshtein_sim
-
-                p = p.withColumn(
-                    "lev", levenshtein_sim(F.col("norm_a"), F.col("norm_b"))
-                )
-                return fused_me_top1(
-                    p, cfg.measure, cfg.dense_weight, cfg.tau_ent
-                )
-            scored = score_pairs(p, cfg.measure, cfg.dense_weight)
-        # top-1 entity per surface, deterministic tie-break on entity id
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("a").orderBy(F.col("score").desc(), F.col("b"), F.col("norm_b"))
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter((F.col("rk") == 1) & (F.col("score") >= cfg.tau_ent))
-            .select("a", "b", "dense", "jw", "lev", "score")
+            alias_embs = _with_emb(alias_records.coalesce(p_ent), enc=cfg.encoder)
+        ea = s_embs.select(F.col("rid").alias("a"), F.col("emb").alias("emb_a"))
+        eb = F.broadcast(
+            alias_embs.select(
+                F.col("rid").alias("b"), F.col("norm").alias("norm_b"), F.col("emb").alias("emb_b")
+            )
         )
+        p = p.join(ea, "a").join(eb, ["b", "norm_b"])
+        return fused_me_top1(p, cfg.measure, cfg.dense_weight, cfg.tau_ent)
 
     pairs_mm = stage("pairs_mm", mm_pairs)
     pairs_me = stage("pairs_me", me_pairs)

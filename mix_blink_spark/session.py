@@ -12,6 +12,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _default_driver_memory() -> str:
+    """A quarter of physical RAM, floor 1g: local mode runs every task
+    inside the driver JVM, and the Python workers, page cache and other
+    tenants of the host need the rest."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1024, ram // 4 // 2**20)}m"
+
+
 # At 100 TB / 1000 executors these become cluster-level spark-defaults;
 # values here are the local[N] analogues of the same knobs.
 _BASE_CONF = {
@@ -59,8 +68,11 @@ _BASE_CONF = {
     "spark.sql.warehouse.dir": os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/mbs-warehouse"),
     # local mode: the driver IS the executor — 32 concurrent tasks with
     # Arrow batches + shuffle buffers thrash GC under small heaps (measured
-    # 66s -> 41s on the bench pipeline going 8g -> 24g)
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    # 66s -> 41s on the bench pipeline going 8g -> 24g); a fixed heap above
+    # the host's RAM gets the JVM OOM-killed, so the default scales with it
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()
+    ),
 }
 
 

@@ -172,11 +172,10 @@ def read_pages_extracted_python(
     cost (box-wide sys share 22% at 32-way on scan+extract, vs 1% for
     pure-JVM compute). Reading the row group directly in Python moves html
     disk→worker once and ships back ~2 KB of text per page; the JVM never
-    touches the heavy column. Measured on this shared host: parity at
-    local[8] (6.9 vs 5.8 s / 60k pages) and inside host-noise at
-    local[32] (interleaved legs swing 3.5-28 s either path), so the
-    standard path stays the default; this one is the option to reach for
-    when the JVM↔Python copy is the profiled bottleneck.
+    touches the heavy column. ``link``/``build_mentions`` select this
+    reader for every parquet-path pages input (round 5: ~2.2× the
+    standard scan single-core); the DataFrame plan serves every other
+    source.
 
     Split granularity is the parquet row group — the same unit the JVM
     scan parallelizes on, so data/task balance is unchanged at any scale.
@@ -336,31 +335,11 @@ def read_pages_extracted_python(
     # 160 near-empty tasks = 25.9 s at local[1], 16 = 3.0 s, 1 = 0.66 s —
     # linear). The gen() loop already processes every split row in its
     # partition, so tasks amortize that cost over many row groups; keep
-    # 2x defaultParallelism partitions (floor 16 so the downstream
-    # io_slots coalesce and speculation still have granularity to work
-    # with). Row groups are uniformly sized, round-robin spread — balance
-    # is unchanged.
+    # 2x defaultParallelism partitions (floor 16 so speculation still has
+    # granularity to work with). Row groups are uniformly sized,
+    # round-robin spread — balance is unchanged.
     dp = spark.sparkContext.defaultParallelism
     n_parts = min(len(frags), max(2 * dp, 16))
-    # resolved at plan time on the driver (closure-captured): worker env
-    # is not part of this knob's contract
-    import os as _os
-
-    _read_threads = _os.environ.get("SPARK_GRAFT_READ_THREADS", "0") == "1"
-    # Direct PLAIN-page html decode (sources/plainscan.py): skips pyarrow's
-    # 0.55 GB/s parquet BYTE_ARRAY assembly and decodes utf-8 straight off
-    # the mmap'd column chunk (~3.7 GB/s measured). Guarded: any metadata
-    # or page-level surprise falls back to the pyarrow read below, so
-    # output is byte-identical by construction. Default OFF: the ~3x
-    # faster scan shrinks the bench corpus' parallel fraction so far that
-    # the frozen 240k-page (1,4) probe pair reads BELOW the 0.8
-    # scaling-efficiency bar on this host (Amdahl: the ~2 s driver-side
-    # tail becomes >20% of a 4-core leg) — see OPTIMIZATION_r08.md for
-    # the measured legs both ways. Production corpora reading cold
-    # storage with compression keep the default; flip it on for
-    # page-cache-resident uncompressed layouts where the reader is the
-    # bottleneck.
-    _plain_decode = _os.environ.get("SPARK_GRAFT_PLAIN_DECODE", "0") == "1"
     splits = spark.createDataFrame(
         frags, "path string, rg int, pkeys string"
     ).repartition(n_parts)
@@ -418,17 +397,6 @@ def read_pages_extracted_python(
                 for v in chunk
             ]
 
-        # Arrow-internal threading for the row-group read. Default OFF
-        # (round 8): a Spark task owns ONE core of its executor's budget;
-        # pyarrow's default pool grabs every HOST core per task, which (a)
-        # oversubscribes any multi-task stage — the measured reason the
-        # scan needed a concurrency cap at local[32] — and (b) silently
-        # inflates low-parallelism legs with cores the contract didn't
-        # grant (a local[1] "1-core" run was really a 32-thread read).
-        # Spark-level parallelism replaces it honestly: same aggregate
-        # throughput at every level, no contention cliff. Env knob for
-        # single-reader deployments where the pool is genuinely free.
-        use_threads = _read_threads
         # one ParquetFile (footer parse + mmap) per distinct file per task:
         # tasks now carry many row groups (see n_parts above), and several
         # of a task's splits usually share a file
@@ -439,40 +407,6 @@ def read_pages_extracted_python(
             if f is None:
                 f = pf_cache[p] = pq.ParquetFile(p, memory_map=True)
             return f
-
-        # fast-path state (SPARK_GRAFT_PLAIN_DECODE=1): an mmap of each
-        # file + the html column's index/nullability, resolved once per
-        # file; None entries mean "this file doesn't qualify — use the
-        # pyarrow path for all of its row groups"
-        mm_cache: dict = {}
-
-        def plain_ctx(p, pf):
-            ctx = mm_cache.get(p, False)
-            if ctx is not False:
-                return ctx
-            ctx = None
-            try:
-                sch = pf.metadata.schema
-                ci = next(
-                    i
-                    for i in range(pf.metadata.num_columns)
-                    if sch.column(i).path == "html"
-                )
-                # the PLAIN page walk assumes exactly one (optional)
-                # def level per row and no rep levels
-                if (
-                    sch.column(ci).max_definition_level == 1
-                    and sch.column(ci).max_repetition_level == 0
-                ):
-                    import mmap as _mmap
-
-                    fh = open(p, "rb")
-                    mm = _mmap.mmap(fh.fileno(), 0, access=_mmap.ACCESS_READ)
-                    ctx = (mm, ci, fh)
-            except (StopIteration, OSError, ValueError):
-                ctx = None
-            mm_cache[p] = ctx
-            return ctx
 
         for pdf in batches:
             for path_, rg, pk_json in zip(pdf["path"], pdf["rg"], pdf["pkeys"]):
@@ -489,32 +423,23 @@ def read_pages_extracted_python(
                 # materialized copy before decode: same kernel scales
                 # near-linearly (14.9k -> 59.6k pages/s, 4 -> 32 readers),
                 # byte-identical output (checksum-equal in the sweep).
-                pf = pfile(path_)
-                decoded = None
-                if _plain_decode:
-                    ctx = plain_ctx(path_, pf)
-                    if ctx is not None:
-                        from .plainscan import plain_decode_utf8
-
-                        rgm = pf.metadata.row_group(int(rg))
-                        decoded = plain_decode_utf8(
-                            ctx[0], rgm.column(ctx[1]), rgm.num_rows
-                        )
-                if decoded is not None:
-                    texts = [extract_text_str(s) for s in decoded]
-                    d = pf.read_row_group(
-                        int(rg), columns=phys_cols, use_threads=use_threads
-                    ).to_pandas()
-                else:
-                    tbl = pf.read_row_group(
-                        int(rg), columns=phys_cols + ["html"], use_threads=use_threads
-                    )
-                    texts = [
-                        extract_text_str(s) if s is not None else None
-                        for chunk in tbl.column("html").chunks
-                        for s in decode_chunk(chunk)
-                    ]
-                    d = tbl.drop_columns("html").to_pandas()
+                # use_threads=False (round 8): a Spark task owns ONE core of
+                # its executor's budget; pyarrow's default pool grabs every
+                # HOST core per task, which oversubscribes any multi-task
+                # stage and silently inflates low-parallelism legs with
+                # cores the contract didn't grant (a local[1] "1-core" run
+                # was really a 32-thread read). Spark-level parallelism
+                # replaces it: same aggregate throughput at every level,
+                # no contention cliff.
+                tbl = pfile(path_).read_row_group(
+                    int(rg), columns=phys_cols + ["html"], use_threads=False
+                )
+                texts = [
+                    extract_text_str(s) if s is not None else None
+                    for chunk in tbl.column("html").chunks
+                    for s in decode_chunk(chunk)
+                ]
+                d = tbl.drop_columns("html").to_pandas()
                 for c in columns:
                     if c in pkeys:  # partition-key constant for this fragment
                         v = pkeys[c]

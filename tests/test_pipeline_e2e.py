@@ -201,61 +201,25 @@ def test_link_parquet_path_parity(spark, tmp_path):
         link(spark, pq_dir, spans, ents, LinkConfig(jvm_extract=True))
 
 
-def test_rowemb_fused_parity_beyond_broadcast(spark, monkeypatch):
+def test_rowemb_fused_parity_beyond_broadcast(spark):
     """broadcast_dense_limit=0 forces the join-the-vectors (row-embedding)
     scoring plan — the beyond-broadcast vocabulary regime. Its fused
-    reduction must produce exactly the window plan's me pairs, which must
-    also equal the broadcast-matrix branch's."""
+    reduction must produce exactly the broadcast-matrix plan's me pairs,
+    and both must equal the driver-local ``local_me_pairs`` rows — an
+    independent implementation of the same top-1 contract."""
     from mix_blink_spark.fixtures import corpus_dfs
 
     pages, ents, golds, _ = corpus_dfs(spark, seed=23, n_pages=250, n_entities=20)
     spans = golds.select("url", "mention_id", "start", "end")
 
-    def run(limit, plan):
-        monkeypatch.setenv("SPARK_GRAFT_ME_PLAN", plan)
-        cfg = LinkConfig(driver_pairs_limit=0, broadcast_dense_limit=limit)
-        out = link(spark, pages, spans, ents, cfg)
+    def run(**kw):
+        out = link(spark, pages, spans, ents, LinkConfig(**kw))
         return {(r["a"], r["b"]): (r["dense"], r["jw"], r["lev"], r["score"])
                 for r in out["pairs_me"].collect()}
 
-    rowemb_fused = run(0, "fused")
-    rowemb_window = run(0, "window")
-    bc_fused = run(500_000, "fused")
-    assert rowemb_fused == rowemb_window
+    rowemb_fused = run(driver_pairs_limit=0, broadcast_dense_limit=0)
+    bc_fused = run(driver_pairs_limit=0)
+    local = run(driver_pairs_limit=50_000)
     assert rowemb_fused == bc_fused
+    assert rowemb_fused == local
     assert len(rowemb_fused) > 0
-
-
-def test_mm_dedup_knob_cluster_parity(spark, monkeypatch):
-    """SPARK_GRAFT_MM_DEDUP=0 skips the mm side's global per-(a, b)
-    dropDuplicates (a full shuffle of the pair set). Duplicate pairs score
-    identically and the edge set is distinct()ed inside
-    connected_components, so clusters must be invariant; the undeduped
-    pair set must equal the deduped one AS A SET (a pair sharing k
-    blocking keys appears k times), with bit-identical scores per key.
-    Measured 1.36x duplicates / net-slower at local[8] in round 7
-    (bench_artifacts/highvocab_r7.json) — the knob stays for cluster-scale
-    re-evaluation, and this test pins its correctness contract."""
-    from mix_blink_spark.fixtures import corpus_dfs
-
-    pages, ents, golds, _ = corpus_dfs(spark, seed=17, n_pages=250, n_entities=20)
-    spans = golds.select("url", "mention_id", "start", "end")
-
-    def run(dedup_env):
-        monkeypatch.setenv("SPARK_GRAFT_MM_DEDUP", dedup_env)
-        # driver_pairs_limit=0 forces the distributed generators (the
-        # knob only exists on the distributed mm path)
-        cfg = LinkConfig(driver_pairs_limit=0, max_block_size=12, neighborhood=4)
-        out = link(spark, pages, spans, ents, cfg)
-        mm_rows = out["pairs_mm"].collect()
-        mm = {(r["a"], r["b"]): (r["dense"], r["jw"], r["lev"], r["score"])
-              for r in mm_rows}
-        cl = {(r["member"], r["cluster_id"]) for r in out["clusters"].collect()}
-        return mm, len(mm_rows), cl
-
-    mm_d, n_d, cl_d = run("1")
-    mm_r, n_r, cl_r = run("0")
-    assert mm_d == mm_r            # same pair set, bit-identical scores
-    assert n_r >= n_d              # raw rows may carry duplicates
-    assert cl_d == cl_r            # clusters invariant
-    assert len(cl_d) > 0

@@ -196,23 +196,3 @@ def test_whole_stage_codegen_on_jvm_path(spark):
     plan = _plan(df)
     assert "*(1)" in plan  # WholeStageCodegen span marker
     assert "PythonUDF" not in plan and "BatchEvalPython" not in plan
-
-
-def test_io_slots_caps_extract_stage_parallelism(spark, corpus):
-    """LinkConfig.io_slots must bound the scan+extract stage's task count
-    (the per-host data-path budget, BASELINE.md round-3 profiling) without
-    changing results; downstream shuffles keep full parallelism."""
-    from mix_blink_spark.plans.pipeline import build_mentions
-
-    pages = corpus["pages"].select("url", "warc_ts", "html", "lang").repartition(4)
-    golds = corpus["mentions_gold"]
-    spans = golds.select("url", "mention_id", "start", "end")
-
-    capped = build_mentions(pages, spans, io_slots=2)
-    # the coalesced scan side runs at <=2 partitions
-    ext = pages.coalesce(2)
-    assert ext.rdd.getNumPartitions() == 2
-    # identical output vs the uncapped path
-    a = sorted(r["mention_id"] for r in build_mentions(pages, spans).select("mention_id").collect())
-    b = sorted(r["mention_id"] for r in capped.select("mention_id").collect())
-    assert a == b and len(a) > 0

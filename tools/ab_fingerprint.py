@@ -2,7 +2,11 @@
 pre-explode size() column (the _maxpos window is a second WindowExec pass
 over every token row; size(tokens) is known before the explode).
 
-Usage: python tools/ab_fingerprint.py [n_docs_multiplier] [reps]
+Usage: python tools/ab_fingerprint.py [n_docs_multiplier] [reps] [docs_parquet] [scratch_dir]
+
+``docs_parquet`` (default ``DOCS``, the sf0.1 documents table) needs
+``doc_id`` and ``text`` columns; ``scratch_dir`` (default ``SCRATCH``) is
+overwritten with the replicated input.
 """
 from __future__ import annotations
 
@@ -17,6 +21,9 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window as W
 
 from mix_blink_spark.session import get_spark
+
+DOCS = "/root/testdata/sf0.1/documents.parquet"
+SCRATCH = "/tmp/ab-fp-docs"
 
 
 def fingerprint_nowin(docs: DataFrame, id_col="doc_id", text_col="text", w=5) -> DataFrame:
@@ -45,17 +52,19 @@ def fingerprint_nowin(docs: DataFrame, id_col="doc_id", text_col="text", w=5) ->
 def main():
     mult = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 4
+    src = sys.argv[3] if len(sys.argv) > 3 else DOCS
+    scratch = sys.argv[4] if len(sys.argv) > 4 else SCRATCH
     from mix_blink_spark.functions.textstats import fingerprint
 
     spark = get_spark(app_name="ab-fingerprint", master="local[32]", shuffle_partitions=64)
-    base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    base = spark.read.parquet(src)
     # scale by replication with distinct ids (measurement input only)
     big = (
         base.crossJoin(spark.range(mult).select(F.col("id").alias("_rep")))
         .select((F.col("doc_id") + F.col("_rep") * 1_000_000).alias("doc_id"), "text")
     )
-    big.write.mode("overwrite").parquet("/tmp/ab-fp-docs")
-    docs = spark.read.parquet("/tmp/ab-fp-docs")
+    big.write.mode("overwrite").parquet(scratch)
+    docs = spark.read.parquet(scratch)
     n = docs.count()
     print(f"docs: {n}")
 
@@ -63,7 +72,7 @@ def main():
     a = fingerprint(base, w=5).orderBy("id").collect()
     b = fingerprint_nowin(base, w=5).orderBy("id").collect()
     assert a == b, "variant results differ!"
-    print("parity: identical on sf0.1 (5000 docs)")
+    print(f"parity: identical on {src}")
 
     ts = {"old": [], "new": []}
     for r in range(reps):
