@@ -191,8 +191,7 @@ def cc_star_benchmark(
 def _run_er(
     spark,
     n_pages: int = ER_PAGES,
-    jvm_extract: bool = False,
-    pydirect: bool | None = None,
+    pydirect: bool = True,
     stage_secs: dict | None = None,
 ) -> tuple[float, int]:
     """Returns (elapsed_sec, n_pages): the full linkage pipeline
@@ -222,16 +221,8 @@ def _run_er(
     # the gate now keys off the best default plan a parquet-backed caller
     # gets. The old standard DataFrame scan stays on the record as the
     # stdscan_* secondary pair (mode 'local-std').
-    if pydirect and jvm_extract:
-        raise ValueError(
-            "pydirect=True is incompatible with jvm_extract=True: the "
-            "python-direct reader extracts in the Python worker, so the "
-            "JVM extraction kernel would never run (round-4 ADVICE: no "
-            "silent fallback)"
-        )
     dp = spark.sparkContext.defaultParallelism
-    use_pyd = (not jvm_extract) if pydirect is None else pydirect
-    if use_pyd:
+    if pydirect:
         from mix_blink_spark.sources.pages import read_pages_extracted_python
 
         pages = read_pages_extracted_python(spark, corpus_p, columns=("url", "lang"))
@@ -259,7 +250,7 @@ def _run_er(
         pages,
         spans,
         ents,
-        LinkConfig(jvm_extract=jvm_extract, broadcast_spans=True, me_max_block_size=200),
+        LinkConfig(broadcast_spans=True, me_max_block_size=200),
         timings=stage_secs,
     )
     out["clusters"].count()
@@ -398,7 +389,7 @@ def _probe_leg(cpus: int, pages: int = ER_PAGES, mode: str = "local") -> tuple[f
     pools), page-cache warm, then the timed full-corpus run.
     mode 'local-std' forces the standard DataFrame scan (the pre-round-5
     default); plain 'local' runs the python-direct default."""
-    pyd = None
+    pyd = True
     if mode == "local-std":
         mode, pyd = "local", False
     spark = _session(cpus, mode)

@@ -56,29 +56,17 @@ def encode_matrix(texts: list[str], dim: int = DIM) -> np.ndarray:
     return np.stack([encode_one(t, dim) for t in texts]) if texts else np.zeros((0, dim), np.float32)
 
 
-@pandas_udf(ArrayType(FloatType()))
-def encode(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Iterator-of-series form: worker-local init happens once per task
-    (the seam where a transformer would be loaded; reference
-    retriever/dense.py:68-84 batches through the entity encoder the same
-    way). Each yielded batch is one Arrow record batch."""
-    # encoder "model" state — trivially cheap here, expensive in production
-    dim = DIM
-    for series in batches:
-        mat = encode_matrix([s if s is not None else "" for s in series], dim)
-        yield pd.Series(list(mat))
-
-
 def make_encoder_udf(batch_fn=None):
     """Build an encoder pandas_udf around any ``list[str] -> np.ndarray``
     batch function — THE production drop-in point. ``batch_fn`` is
     closure-captured (cloudpickle ships it to executors by value), and may
     lazy-init heavyweight state (an HF model) on first batch so the load
-    happens once per worker process, never per row.
-
-    ``make_encoder_udf()`` == the default trigram ``encode``.
+    happens once per worker process, never per row (reference
+    retriever/dense.py:68-84 batches through the entity encoder the same
+    way). Each yielded batch is one Arrow record batch; nulls encode as
+    ``""``. The default is the trigram ``encode_matrix``.
     """
-    fn = batch_fn or (lambda texts: encode_matrix(texts))
+    fn = batch_fn or encode_matrix
 
     @pandas_udf(ArrayType(FloatType()))
     def _encode(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -87,6 +75,9 @@ def make_encoder_udf(batch_fn=None):
             yield pd.Series(list(np.asarray(mat, dtype=np.float32)))
 
     return _encode
+
+
+encode = make_encoder_udf()
 
 
 def hf_encode_batch(model_name: str, max_length: int = 128, normalize: bool = True):

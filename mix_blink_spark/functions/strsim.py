@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 from pyspark.sql.functions import pandas_udf
 
+from . import rechunk
+
 
 def jaro(s1: str, s2: str) -> float:
     """Plain Jaro similarity (match window floor(max/2)-1, transpositions/2).
@@ -209,34 +211,17 @@ def jaro_winkler_np(
 def jaro_winkler_udf(
     batches: Iterator[tuple[pd.Series, pd.Series]],
 ) -> Iterator[pd.Series]:
-    """Batched JW over Arrow record batches (SURVEY.md §2.8 kernel 3).
-
-    Iterator form with internal re-chunking: the session's Arrow batch cap
-    is sized for multi-KB html cells (128 rows), far below what the
-    vectorized kernel needs to amortize its per-call numpy overhead —
-    input batches are buffered to ~4k-pair chunks before scoring (output
-    total length still equals input total length, which is the only
-    contract SCALAR_ITER imposes). Nulls map to NaN, exactly as the old
-    per-pair form did via float64 Series coercion."""
-    CHUNK = 4096
-
-    def flush(a_buf: list, b_buf: list) -> pd.Series:
-        res = np.full(len(a_buf), np.nan, dtype=np.float64)
-        nn = [i for i, (x, y) in enumerate(zip(a_buf, b_buf)) if x is not None and y is not None]
+    """Batched JW over Arrow record batches (SURVEY.md §2.8 kernel 3),
+    re-chunked to ~4k pairs per kernel call (see ``rechunk``). A pair
+    with a null side scores NaN."""
+    for group in rechunk(batches, 4096):
+        a = [x for a_ser, _ in group for x in a_ser.tolist()]
+        b = [y for _, b_ser in group for y in b_ser.tolist()]
+        res = np.full(len(a), np.nan, dtype=np.float64)
+        nn = [i for i, (x, y) in enumerate(zip(a, b)) if x is not None and y is not None]
         if nn:
-            res[nn] = jaro_winkler_np([a_buf[i] for i in nn], [b_buf[i] for i in nn])
-        return pd.Series(res)
-
-    a_buf: list = []
-    b_buf: list = []
-    for a_ser, b_ser in batches:
-        a_buf.extend(a_ser.tolist())
-        b_buf.extend(b_ser.tolist())
-        if len(a_buf) >= CHUNK:
-            yield flush(a_buf, b_buf)
-            a_buf, b_buf = [], []
-    if a_buf:
-        yield flush(a_buf, b_buf)
+            res[nn] = jaro_winkler_np([a[i] for i in nn], [b[i] for i in nn])
+        yield pd.Series(res)
 
 
 def levenshtein_sim(a: Column, b: Column) -> Column:

@@ -187,35 +187,6 @@ def extract_text(html_bin: pd.Series) -> pd.Series:
     return decoded.map(lambda s: extract_text_str(s) if s is not None else None)
 
 
-def extract_text_jvm(html_bin: Column) -> Column:
-    """JVM-only extraction fast path: the same strip pipeline as
-    ``extract_text`` built from codegen'd ``regexp_replace`` — no Arrow
-    transfer of the heavy html column, no Python worker.
-
-    Byte-identical to the Python kernel for documents whose entities are
-    limited to the named set below (&amp; &lt; &gt; &quot; &#39; &nbsp;) —
-    which covers standard-escaped content. Exotic numeric/named entities
-    need the Python kernel's full ``html.unescape``; callers pick the path
-    per corpus contract. Verified equal to the Python kernel on the
-    fixture corpus in tests/test_text.py.
-
-    Measured caveat: on heavy-boilerplate 80KB pages Java's backtracking
-    regex made this ~2x SLOWER than the Arrow Python kernel (156s vs 72s
-    for the bench pipeline at local[4]) — kept as a correctness
-    cross-check and for corpora with light markup, not as the default.
-    """
-    s = F.decode(html_bin, "UTF-8")
-    s = F.regexp_replace(s, r"(?is)<(script|style|nav|footer|head)\b[^>]*>.*?</\1>", " ")
-    s = F.regexp_replace(s, r"(?i)</?(p|div|article|section|br|li|tr|h[1-6])\b[^>]*>", " ")
-    s = F.regexp_replace(s, r"<[^>]+>", " ")
-    for ent, rep in (
-        ("&lt;", "<"), ("&gt;", ">"), ("&quot;", "\""), ("&#39;", "'"),
-        ("&nbsp;", " "), ("&amp;", "&"),  # &amp; last: avoid double-decode
-    ):
-        s = F.replace(s, F.lit(ent), F.lit(rep))
-    return F.trim(F.regexp_replace(s, r"[ \t\r\n]+", " "))
-
-
 # ---------------------------------------------------------------------------
 # JVM-side normalization + blocking keys (no Python)
 

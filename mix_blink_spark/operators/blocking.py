@@ -24,8 +24,9 @@ reducer's work regardless of key distribution.
 from __future__ import annotations
 
 from hashlib import blake2b
-from typing import Iterator
+from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,13 +40,16 @@ DEFAULT_ROWS = 2
 DEFAULT_SHINGLE = 4
 
 
-def _minhash_band_keys(s: str, bands: int, rows: int, shingle: int) -> list[str]:
+def _shingles(s: str, shingle: int) -> set[str]:
     padded = f" {s} "
-    grams = (
-        {padded[i : i + shingle] for i in range(len(padded) - shingle + 1)}
-        if len(padded) >= shingle
-        else {padded}
-    )
+    if len(padded) < shingle:
+        return {padded}
+    return {padded[i : i + shingle] for i in range(len(padded) - shingle + 1)}
+
+
+def _minhash_band_keys(s: str, bands: int, rows: int, shingle: int) -> list[str]:
+    """Readable reference for ``band_key_kernel``."""
+    grams = _shingles(s, shingle)
     keys = []
     for b in range(bands):
         sig = []
@@ -60,23 +64,21 @@ def _minhash_band_keys(s: str, bands: int, rows: int, shingle: int) -> list[str]
     return keys
 
 
-@pandas_udf(ArrayType(StringType()))
-def minhash_band_keys(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """norm surface -> array of LSH band keys (Arrow-batched).
+def band_key_kernel() -> Callable[[str], list[str]]:
+    """The band-key kernel every blocking plan calls: a function equal to
+    ``_minhash_band_keys(s, DEFAULT_BANDS, DEFAULT_ROWS, DEFAULT_SHINGLE)``
+    for every string ``s``.
 
-    Output is identical to mapping ``_minhash_band_keys`` per string; the
-    kernel memoizes the (bands x rows) blake2b digests PER SHINGLE across
-    the whole worker lifetime — surface vocabularies share shingles
-    heavily ('corp', ' the'), and the blake2b calls were the dominant
-    candidate-generation cost at vocabulary scale (round-5 profile: the
-    alias-side keyed_records carried ~8 s of a ~13 s generation stage at
-    17k aliases). The per-record min over the shingle matrix is numpy.
+    It memoizes the (bands x rows) blake2b digests PER SHINGLE for its
+    own lifetime — surface vocabularies share shingles heavily ('corp',
+    ' the'), and the blake2b calls were the dominant candidate-generation
+    cost at vocabulary scale (round-5 profile: the alias-side
+    keyed_records carried ~8 s of a ~13 s generation stage at 17k
+    aliases). The per-record min over the shingle matrix is numpy.
     """
-    import numpy as np
-
-    B, R, SH = DEFAULT_BANDS, DEFAULT_ROWS, DEFAULT_SHINGLE
+    B, R = DEFAULT_BANDS, DEFAULT_ROWS
     salts = [b"%d:%d" % (b, r) for b in range(B) for r in range(R)]
-    memo: dict[str, "np.ndarray"] = {}
+    memo: dict[str, np.ndarray] = {}
     # Bound worker memory by MEASURED bytes, not entry count (round-5
     # verdict item 7: at 8 salts an entry is ~64 B of uint64 data plus
     # ~250-300 B of ndarray/dict/key overhead — a 2M-entry count cap was
@@ -87,7 +89,7 @@ def minhash_band_keys(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     memo_budget = 128 * 1024 * 1024
     memo_bytes = 0
 
-    def shingle_hashes(g: str) -> "np.ndarray":
+    def shingle_hashes(g: str) -> np.ndarray:
         nonlocal memo_bytes
         v = memo.get(g)
         if v is None:
@@ -107,26 +109,23 @@ def minhash_band_keys(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
                 memo_bytes += v.nbytes + 112 + 104 + (49 + len(enc))
         return v
 
+    def band_keys(s: str) -> list[str]:
+        mins = np.minimum.reduce([shingle_hashes(g) for g in _shingles(s, DEFAULT_SHINGLE)])
+        return [
+            f"mh{b}:" + "-".join(format(int(mins[b * R + r]), "x") for r in range(R))
+            for b in range(B)
+        ]
+
+    return band_keys
+
+
+@pandas_udf(ArrayType(StringType()))
+def minhash_band_keys(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    """norm surface -> array of LSH band keys (Arrow-batched); empty and
+    null norms get none. One ``band_key_kernel`` per task."""
+    band_keys = band_key_kernel()
     for series in batches:
-        out = []
-        for s in series:
-            if not s:
-                out.append([])
-                continue
-            padded = f" {s} "
-            grams = (
-                {padded[i : i + SH] for i in range(len(padded) - SH + 1)}
-                if len(padded) >= SH
-                else {padded}
-            )
-            mins = np.minimum.reduce([shingle_hashes(g) for g in grams])
-            out.append(
-                [
-                    f"mh{b}:" + "-".join(format(int(mins[b * R + r]), "x") for r in range(R))
-                    for b in range(B)
-                ]
-            )
-        yield pd.Series(out)
+        yield pd.Series([band_keys(s) if s else [] for s in series])
 
 
 def keyed_records(records: DataFrame, id_col: str, norm_col: str = "norm") -> DataFrame:

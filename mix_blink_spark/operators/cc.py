@@ -41,28 +41,19 @@ def _canonical(edges: DataFrame) -> DataFrame:
     )
 
 
-def _large_star(edges: DataFrame, dedup: bool = True) -> DataFrame:
+def _large_star(edges: DataFrame) -> DataFrame:
     # symmetrize: neighborhood of u includes both directions
     sym = edges.select("src", "dst").unionAll(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     nbr_min = sym.groupBy("src").agg(F.least(F.min("dst"), F.first("src")).alias("mn"))
-    out = (
+    return (
         # attach strictly-greater neighbors to the min
         sym.join(nbr_min, "src")
         .filter(F.col("dst") > F.col("src"))
         .select(F.col("dst").alias("src"), F.col("mn").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
     )
-    # ``dedup=False`` skips the intermediate distinct — a full exchange of
-    # the largest per-iteration frame. Safe ONLY when the caller's next
-    # step restores set semantics anyway: the star loop feeds this output
-    # straight into ``_small_star``, whose min-aggregate is unaffected by
-    # duplicate edges and whose final distinct re-canonicalizes the set,
-    # so the composed iteration (and its convergence signature, taken
-    # after small-star) is row-identical. Measured on the 10M-edge star
-    # benchmark: 63.2 -> 51.6 s, same 6 iterations (round 8, guide §2.4).
-    return out.distinct() if dedup else out
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
@@ -198,7 +189,14 @@ def connected_components(
         # checkpointed frame disappears. Verified populated by BOTH
         # localCheckpoint(eager) and reliable checkpoint(eager) on 4.1.2.
         obs = Observation(f"cc-sig-{it}")
-        nxt = _small_star(_large_star(e, dedup=False)).observe(
+        # large-star's output may carry duplicate edges: no distinct (a
+        # full exchange of the largest per-iteration frame) is needed,
+        # because _small_star's min-aggregate is unaffected by duplicates
+        # and its final distinct re-canonicalizes the set, so the composed
+        # iteration (and its convergence signature, taken after
+        # small-star) is row-identical. Measured on the 10M-edge star
+        # benchmark: 63.2 -> 51.6 s, same 6 iterations (round 8, guide §2.4).
+        nxt = _small_star(_large_star(e)).observe(
             obs,
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),

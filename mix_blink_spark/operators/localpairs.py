@@ -16,76 +16,39 @@ parity test in tests/test_pipeline_e2e.py, which compares both paths
 pair-for-pair and bit-for-bit on scores):
 
   - keys: ``keyed_records``'s tk/st/minhash-band families
-    (functions.text.blocking_key / sorted_token_key,
-    operators.blocking._minhash_band_keys), array_union-deduped;
+    (functions.text.blocking_key / sorted_token_key, the shared
+    operators.blocking.band_key_kernel), array_union-deduped;
   - mm pairs: ``candidate_pairs`` — all pairs for blocks ≤ cap,
     sorted-neighborhood (order by norm, rid; ``w`` successors) above;
   - me pairs: ``cross_family_pairs`` — exact product for combined blocks
     ≤ cap, insertion-window over the norm-interleaved order above;
-  - scores: float-identical composition (same float32 matrices through
-    ``_dense_np``, ``jaro_winkler_np``, vectorized Levenshtein matching
-    ``F.levenshtein``, same combine arithmetic);
+  - scores: the distributed kernels themselves (same float32 matrices
+    through ``_dense_np``, ``jaro_winkler_np``, the shared
+    ``lev_sim_np``/``pair_score_np`` arithmetic) plus a vectorized
+    Levenshtein matching ``F.levenshtein``;
   - me top-1 per surface: (score desc, b, norm_b) tie-break, tau_ent
     threshold after ranking.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 import numpy as np
 
 from ..functions.strsim import jaro_winkler_np
-from .blocking import DEFAULT_BANDS, DEFAULT_ROWS, DEFAULT_SHINGLE, _minhash_band_keys
-from .scoring import _dense_np
+from .blocking import band_key_kernel
+from .scoring import _dense_np, lev_sim_np, pair_score_np
 
 
-def record_keys(norm: str, _memo: dict | None = None) -> list[str]:
-    """Python mirror of ``keyed_records``'s key expression: distinct of
+def record_keys(norm: str, band_keys: Callable[[str], list[str]]) -> list[str]:
+    """``keyed_records``'s key expression for one norm: distinct of
     [tk:<first token>, st:<sorted tokens>, mh<i>:<band sig>...].
-
-    ``_memo``: optional per-call-site dict memoizing each distinct
-    SHINGLE's (bands x rows) blake2b digests — the same memoization the
-    distributed ``minhash_band_keys`` UDF applies (surface vocabularies
-    share shingles heavily); identical keys, ~3x fewer digest calls at
-    bench vocabulary (round 8)."""
+    ``band_keys`` is a ``blocking.band_key_kernel()``, shared across one
+    call's records so its shingle memo spans the vocabulary."""
     tk = "tk:" + norm.split(" ", 1)[0]
     st = "st:" + " ".join(sorted(norm.split(" ")))
-    if not norm:
-        return list(dict.fromkeys([tk, st]))
-    if _memo is None:
-        mh = _minhash_band_keys(norm, DEFAULT_BANDS, DEFAULT_ROWS, DEFAULT_SHINGLE)
-        return list(dict.fromkeys([tk, st, *mh]))
-    import numpy as np
-    from hashlib import blake2b
-
-    B, R, SH = DEFAULT_BANDS, DEFAULT_ROWS, DEFAULT_SHINGLE
-    salts = _memo.setdefault(
-        "__salts__", [b"%d:%d" % (b, r) for b in range(B) for r in range(R)]
-    )
-    padded = f" {norm} "
-    grams = (
-        {padded[i : i + SH] for i in range(len(padded) - SH + 1)}
-        if len(padded) >= SH
-        else {padded}
-    )
-    rows = []
-    for g in grams:
-        v = _memo.get(g)
-        if v is None:
-            enc = g.encode("utf-8")
-            v = _memo[g] = np.array(
-                [
-                    int.from_bytes(blake2b(enc, digest_size=8, key=s).digest(), "big")
-                    for s in salts
-                ],
-                dtype=np.uint64,
-            )
-        rows.append(v)
-    mins = np.minimum.reduce(rows)
-    mh = [
-        f"mh{b}:" + "-".join(format(int(mins[b * R + r]), "x") for r in range(R))
-        for b in range(B)
-    ]
-    return list(dict.fromkeys([tk, st, *mh]))
+    return list(dict.fromkeys([tk, st, *(band_keys(norm) if norm else [])]))
 
 
 def levenshtein_np(sa: list[str], sb: list[str]) -> np.ndarray:
@@ -160,31 +123,8 @@ def _levenshtein_np_flat(sa: list[str], sb: list[str]) -> np.ndarray:
     return out
 
 
-def _score(
-    ia: np.ndarray,
-    ib: np.ndarray,
-    mat_a: np.ndarray,
-    mat_b: np.ndarray,
-    norms_a: list[str],
-    norms_b: list[str],
-    measure: str,
-    dense_weight: float,
-):
-    """(dense, jw, lev_sim, score) arrays — float-identical to the
-    distributed composition in operators.scoring.score_pairs."""
-    dense = _dense_np(
-        mat_a[ia].astype(np.float64), mat_b[ib].astype(np.float64), measure
-    )
-    dense_sim = (1.0 / (1.0 + dense)) if measure == "l2" else dense
-    jw = jaro_winkler_np(norms_a, norms_b)
-    lev = levenshtein_np(norms_a, norms_b)
-    la = np.fromiter((len(s) for s in norms_a), np.int64, len(norms_a))
-    lb = np.fromiter((len(s) for s in norms_b), np.int64, len(norms_b))
-    ml = np.maximum(la, lb)
-    lev_sim = np.where(ml == 0, 1.0, 1.0 - lev / np.maximum(ml, 1).astype(np.float64))
-    lex = np.maximum(jw, lev_sim)
-    score = dense_weight * dense_sim + (1.0 - dense_weight) * lex
-    return dense, jw, lev_sim, score
+def _max_len(sa: list[str], sb: list[str]) -> np.ndarray:
+    return np.fromiter((max(len(a), len(b)) for a, b in zip(sa, sb)), np.int64, len(sa))
 
 
 def local_mm_pairs(
@@ -200,11 +140,11 @@ def local_mm_pairs(
     ``surfs``: [(rid, norm)] aligned with ``mat`` rows. Returns rows
     (a, b, dense, jw, lev, score) with a < b, deduped across keys."""
     by_key: dict[str, list[int]] = {}
-    memo: dict = {}
+    band_keys = band_key_kernel()
     for i, (_rid, norm) in enumerate(surfs):
         if not norm:
             continue
-        for k in record_keys(norm, memo):
+        for k in record_keys(norm, band_keys):
             by_key.setdefault(k, []).append(i)
 
     pair_idx: dict[tuple[str, str], tuple[int, int]] = {}
@@ -232,7 +172,10 @@ def local_mm_pairs(
     ib = np.fromiter((p[1] for p in items), np.int64, len(items))
     na = [surfs[i][1] for i in ia]
     nb = [surfs[i][1] for i in ib]
-    dense, jw, lev_sim, score = _score(ia, ib, mat, mat, na, nb, measure, dense_weight)
+    dense = _dense_np(mat[ia].astype(np.float64), mat[ib].astype(np.float64), measure)
+    jw = jaro_winkler_np(na, nb)
+    lev_sim = lev_sim_np(levenshtein_np(na, nb), _max_len(na, nb))
+    score = pair_score_np(dense, jw, lev_sim, measure, dense_weight)
     return [
         (surfs[ia[k]][0], surfs[ib[k]][0], float(dense[k]), float(jw[k]), float(lev_sim[k]), float(score[k]))
         for k in range(len(items))
@@ -257,12 +200,12 @@ def local_me_pairs(
     norm_b) alias with score >= tau_ent."""
     left: dict[str, list[int]] = {}
     right: dict[str, list[int]] = {}
-    memo: dict = {}
+    band_keys = band_key_kernel()
     for i, (_rid, norm) in enumerate(surfs):
-        for k in record_keys(norm, memo):
+        for k in record_keys(norm, band_keys):
             left.setdefault(k, []).append(i)
     for i, (_rid, norm) in enumerate(aliases):
-        for k in record_keys(norm, memo):
+        for k in record_keys(norm, band_keys):
             right.setdefault(k, []).append(i)
 
     cand: dict[tuple[str, str, str], tuple[int, int]] = {}
@@ -310,39 +253,31 @@ def local_me_pairs(
     # Only each surface's top-1 candidate survives, so the Levenshtein DP
     # (the dominant cost of this tail at bench vocabulary — ~60% of the
     # kernel) only needs to run where a pair could still win. Exact
-    # bounds: lev >= |la-lb| gives lev_sim <= 1 - |la-lb|/ml (ub), and
-    # lev_sim >= 0 gives score >= dw*dense + (1-dw)*jw (lb). A pair whose
-    # ub-score is below its surface's best lb-score is strictly worse
-    # than the true winner (winner's exact score >= every lb), so
-    # dropping it cannot change the argmax or its emitted values; ties at
-    # equality are kept (>=). Winners' (dense, jw, lev, score) are
-    # computed with the identical float64 expressions as _score, so the
-    # output rows are bit-identical to the unpruned path (parity-gated in
-    # tests/test_pipeline_e2e.py against the distributed operators).
+    # bounds: lev >= |la-lb| gives the upper-bound score, and lev_sim >= 0
+    # the lower bound. A pair whose ub-score is below its surface's best
+    # lb-score is strictly worse than the true winner (winner's exact
+    # score >= every lb), so dropping it cannot change the argmax or its
+    # emitted values; ties at equality are kept (>=). Winners' rows come
+    # from the same helpers as the unpruned path, so they are
+    # bit-identical (parity-gated in tests/test_pipeline_e2e.py against
+    # the distributed operators).
     dense = _dense_np(
         s_mat[ia].astype(np.float64), a_mat[ib].astype(np.float64), measure
     )
-    dense_sim = (1.0 / (1.0 + dense)) if measure == "l2" else dense
     jw = jaro_winkler_np(na, nb)
-    la = np.fromiter((len(s) for s in na), np.int64, len(na))
-    lb_ = np.fromiter((len(s) for s in nb), np.int64, len(nb))
-    ml = np.maximum(la, lb_)
-    lev_ub = np.where(
-        ml == 0, 1.0, 1.0 - np.abs(la - lb_) / np.maximum(ml, 1).astype(np.float64)
+    ml = _max_len(na, nb)
+    len_gap = np.abs(
+        np.fromiter((len(x) - len(y) for x, y in zip(na, nb)), np.int64, len(na))
     )
-    w2 = 1.0 - dense_weight
-    ub_score = dense_weight * dense_sim + w2 * np.maximum(jw, lev_ub)
-    lb_score = dense_weight * dense_sim + w2 * jw
+    ub_score = pair_score_np(dense, jw, lev_sim_np(len_gap, ml), measure, dense_weight)
+    lb_score = pair_score_np(dense, jw, 0.0, measure, dense_weight)
     best_lb = np.full(len(surfs), -np.inf)
     np.maximum.at(best_lb, ia, lb_score)
     keep = np.flatnonzero(ub_score >= best_lb[ia])
-    lev = levenshtein_np([na[i] for i in keep], [nb[i] for i in keep])
-    mlk = ml[keep]
-    lev_sim_k = np.where(
-        mlk == 0, 1.0, 1.0 - lev / np.maximum(mlk, 1).astype(np.float64)
+    lev_sim_k = lev_sim_np(
+        levenshtein_np([na[i] for i in keep], [nb[i] for i in keep]), ml[keep]
     )
-    lex_k = np.maximum(jw[keep], lev_sim_k)
-    score_k = dense_weight * dense_sim[keep] + (1.0 - dense_weight) * lex_k
+    score_k = pair_score_np(dense[keep], jw[keep], lev_sim_k, measure, dense_weight)
 
     best: dict[str, tuple] = {}
     for j, k in enumerate(keep):

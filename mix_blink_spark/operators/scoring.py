@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 from pyspark.sql.functions import pandas_udf
 
+from ..functions import rechunk
 from ..functions.strsim import jaro_winkler_udf, levenshtein_sim
 
 MEASURES = ("ip", "cos", "l2")
@@ -59,32 +60,37 @@ def _dense_np(a: np.ndarray, b: np.ndarray, measure: str) -> np.ndarray:
     raise NotImplementedError(f"{measure} is not supported")
 
 
+def lev_sim_np(lev: np.ndarray, max_len: np.ndarray) -> np.ndarray:
+    """``levenshtein_sim`` from an edit distance: 1 - lev/max_len, 1.0
+    when both strings are empty (``max_len`` = the longer length)."""
+    return np.where(
+        max_len == 0, 1.0, 1.0 - lev / np.maximum(max_len, 1).astype(np.float64)
+    )
+
+
+def pair_score_np(
+    dense: np.ndarray, jw: np.ndarray, lev_sim: np.ndarray | float, measure: str,
+    dense_weight: float,
+) -> np.ndarray:
+    """``score_pairs``'s combined score over numpy arrays, IEEE-identical
+    to the column expression: float64 ``w·dense_sim + (1-w)·max(jw,
+    lev_sim)``, with an ``l2`` distance entering as ``1/(1+d)``."""
+    dense_sim = (1.0 / (1.0 + dense)) if measure == "l2" else dense
+    return dense_weight * dense_sim + (1.0 - dense_weight) * np.maximum(jw, lev_sim)
+
+
 def make_dense_score_udf(measure: str):
     """Row-aligned dense score over two ArrayType(Float) columns.
-    Arrow-batched; numpy einsum inside — no per-row Python."""
+    Arrow-batched, re-chunked to ~4k pairs (see ``rechunk``); numpy
+    einsum inside — no per-row Python."""
     check_measure(measure)
-
-    CHUNK = 4096
 
     @pandas_udf(DoubleType())
     def dense_score(batches: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        # re-chunk tiny Arrow batches (session cap is sized for html cells)
-        # so per-call numpy overhead amortizes — see make_broadcast_dense_udf
-        def flush(a_parts, b_parts):
-            a = np.stack(pd.concat(a_parts, ignore_index=True).to_numpy())
-            b = np.stack(pd.concat(b_parts, ignore_index=True).to_numpy())
-            return pd.Series(_dense_np(a.astype(np.float64), b.astype(np.float64), measure))
-
-        a_buf, b_buf, size = [], [], 0
-        for a_ser, b_ser in batches:
-            a_buf.append(a_ser)
-            b_buf.append(b_ser)
-            size += len(a_ser)
-            if size >= CHUNK:
-                yield flush(a_buf, b_buf)
-                a_buf, b_buf, size = [], [], 0
-        if size:
-            yield flush(a_buf, b_buf)
+        for group in rechunk(batches, 4096):
+            a = np.stack(pd.concat([a for a, _ in group], ignore_index=True).to_numpy())
+            b = np.stack(pd.concat([b for _, b in group], ignore_index=True).to_numpy())
+            yield pd.Series(_dense_np(a.astype(np.float64), b.astype(np.float64), measure))
 
     return dense_score
 
@@ -99,44 +105,24 @@ def make_broadcast_dense_udf(measure: str, bc_a, bc_b):
     dominant scoring cost (round-4 profiling: ~134 us/pair on the
     join-the-vectors plan, ~10 us/pair on this one).
 
-    Iterator form with internal re-chunking (see ``jaro_winkler_udf``):
-    the session Arrow batch cap is sized for multi-KB html cells (128
-    rows), and per-batch numpy overhead at that size is ~25x the actual
-    math — input batches are buffered to ~8k-pair chunks before scoring.
-    The id→row dicts resolve once per worker task. Unknown ids raise
+    Input batches are re-chunked to ~8k pairs (see ``rechunk``). The
+    id→row dicts resolve once per worker task. Unknown ids raise
     (blocking emitted a pair for a record that was never encoded — a
     pipeline bug, never data)."""
     check_measure(measure)
-    CHUNK = 8192
 
     @pandas_udf(DoubleType())
     def bc_dense(batches: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
         ids_a, mat_a = bc_a.value
         ids_b, mat_b = bc_b.value
-
-        def flush(a_parts: list[pd.Series], b_parts: list[pd.Series]) -> pd.Series:
-            a_ser = pd.concat(a_parts, ignore_index=True) if len(a_parts) > 1 else a_parts[0]
-            b_ser = pd.concat(b_parts, ignore_index=True) if len(b_parts) > 1 else b_parts[0]
+        for group in rechunk(batches, 8192):
+            a_ser = pd.concat([a for a, _ in group], ignore_index=True)
+            b_ser = pd.concat([b for _, b in group], ignore_index=True)
             ia = a_ser.map(ids_a).to_numpy(dtype=np.int64)
             ib = b_ser.map(ids_b).to_numpy(dtype=np.int64)
-            return pd.Series(
-                _dense_np(
-                    mat_a[ia].astype(np.float64), mat_b[ib].astype(np.float64), measure
-                )
+            yield pd.Series(
+                _dense_np(mat_a[ia].astype(np.float64), mat_b[ib].astype(np.float64), measure)
             )
-
-        a_buf: list[pd.Series] = []
-        b_buf: list[pd.Series] = []
-        size = 0
-        for a_ser, b_ser in batches:
-            a_buf.append(a_ser)
-            b_buf.append(b_ser)
-            size += len(a_ser)
-            if size >= CHUNK:
-                yield flush(a_buf, b_buf)
-                a_buf, b_buf, size = [], [], 0
-        if size:
-            yield flush(a_buf, b_buf)
 
     return bc_dense
 
@@ -224,9 +210,8 @@ def fused_me_top1(
     rows (the generator runs dedup=False) score identically and collapse
     in the argmax.
 
-    Score arithmetic matches ``score_pairs`` exactly: float64
-    ``w·dense_sim + (1-w)·max(jw, lev)`` with the same l2→similarity
-    mapping — IEEE-identical to the column expression it replaces.
+    Score arithmetic is ``pair_score_np`` — IEEE-identical to
+    ``score_pairs``' column expression.
     """
     check_measure(measure)
     import pyarrow as pa
@@ -234,7 +219,6 @@ def fused_me_top1(
     from ..functions.strsim import jaro_winkler_np
     from pyspark.sql.window import Window
 
-    w_d = float(dense_weight)
     out_schema = (
         "a string, b string, norm_b string, dense double, jw double, "
         "lev double, score double"
@@ -250,13 +234,11 @@ def fused_me_top1(
             ("score", pa.float64()),
         ]
     )
-    CHUNK = 8192
-
     # mapInArrow, not mapInPandas: the session's Arrow batch cap is sized
     # for multi-KB html cells (128 rows), and per-batch pandas DataFrame
     # construction at that granularity cost MORE than the shuffle the
     # fusion removes (measured: ~9.3k tiny frames for 1.2M candidates).
-    # RecordBatches concatenate zero-copy; ONE to_pandas per CHUNK rows.
+    # RecordBatches concatenate zero-copy; ONE to_pandas per ~8k rows.
     row_emb = bc_a is None
 
     def part(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
@@ -319,8 +301,7 @@ def fused_me_top1(
                 )
             jw = jaro_winkler_np(pdf["norm_a"].tolist(), pdf["norm_b"].tolist())
             lev = pdf["lev"].to_numpy(dtype=np.float64)
-            dense_sim = 1.0 / (1.0 + dense) if measure == "l2" else dense
-            score = w_d * dense_sim + (1.0 - w_d) * np.maximum(jw, lev)
+            score = pair_score_np(dense, jw, lev, measure, float(dense_weight))
             out = pd.DataFrame(
                 {
                     "a": pdf["a"].to_numpy(),
@@ -346,8 +327,6 @@ def fused_me_top1(
         # Amortized cost stays O(|winners| / drain_rows) per new row.
         acc: list[pd.DataFrame] = []
         pending = 0
-        buf: list["pa.RecordBatch"] = []
-        size = 0
 
         def drain() -> None:
             nonlocal acc, pending
@@ -355,22 +334,11 @@ def fused_me_top1(
                 acc = [top1(pd.concat(acc, ignore_index=True))]
             pending = 0
 
-        def flush() -> pd.DataFrame:
-            return pa.Table.from_batches(buf).to_pandas()
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            buf.append(rb)
-            size += rb.num_rows
-            if size >= CHUNK:
-                acc.append(score_chunk(flush()))
-                pending += len(acc[-1])
-                buf, size = [], 0
-                if pending >= drain_rows:
-                    drain()
-        if size:
-            acc.append(score_chunk(flush()))
+        for group in rechunk(batches, 8192):
+            acc.append(score_chunk(pa.Table.from_batches(group).to_pandas()))
+            pending += len(acc[-1])
+            if pending >= drain_rows:
+                drain()
         drain()
         if acc and len(acc[0]):
             yield pa.RecordBatch.from_pandas(

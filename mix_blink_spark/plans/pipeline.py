@@ -73,10 +73,6 @@ class LinkConfig:
     tau_ent: float = 0.80      # mention->entity anchor threshold
     max_block_size: int = 200
     neighborhood: int = 8
-    # JVM codegen extraction fast path (functions/text.extract_text_jvm):
-    # byte-equal for standard-escaped corpora, ~no Python in the per-page
-    # stage. Default False = full-fidelity Python kernel.
-    jvm_extract: bool = False
     # encoder pandas_udf (Column -> Column) — the E1/E2 production seam:
     # None = the trigram `encode`; pass make_encoder_udf(hf_encode_batch(..))
     # or make_encoder_udf(mini_transformer_batch(..)) to swap encoders
@@ -141,53 +137,35 @@ def _attach_embs(pairs: DataFrame, embs_a: DataFrame, embs_b: DataFrame) -> Data
 def build_mentions(
     pages: DataFrame | str,
     spans: DataFrame,
-    from_html: bool = True,
-    jvm_extract: bool = False,
     broadcast_spans: bool = False,
 ) -> DataFrame:
-    """Extract text from ``html`` (the byte-stable kernel — the pipeline's
-    own text, never trusting a pre-extracted column) and slice mention
-    surfaces. ``html`` is pruned immediately after extraction.
+    """Extract page text and slice mention surfaces. The plan follows the
+    input type:
 
-    ``pages`` may be a parquet PATH instead of a DataFrame: the scan then
-    uses the python-direct row-group reader
-    (``sources.pages.read_pages_extracted_python`` — mmap parquet decode +
-    extraction inside the Python worker, html never crossing the
-    JVM↔Python socket), the fastest measured plan at every parallelism
-    level on parquet-backed pages (round 5: ~2.2× the standard scan
-    single-core). Byte-identical text output (parity-gated); the
-    DataFrame form remains the plan for non-parquet sources (Iceberg,
-    streams, in-memory tests)."""
+    - a parquet PATH: the python-direct row-group reader
+      (``sources.pages.read_pages_extracted_python`` — mmap parquet decode
+      + ``extract_text_str`` inside the Python worker, html never crossing
+      the JVM↔Python socket), the fastest measured plan at every
+      parallelism level on parquet-backed pages (round 5: ~2.2× the
+      standard scan single-core);
+    - a DataFrame (Iceberg, streams, in-memory tests): the ``extract_text``
+      pandas_udf over ``html`` when that column is present — the
+      pipeline's own text, never trusting a pre-extracted column — else
+      its ``text`` column as is.
+
+    Both extract with the same kernel, so the text is byte-identical
+    (parity-gated). ``html`` is pruned immediately after extraction."""
     if isinstance(pages, str):
-        if jvm_extract:
-            raise ValueError(
-                "jvm_extract=True is the JVM DataFrame plan; a parquet-path "
-                "pages input selects the python-direct reader — pass a "
-                "DataFrame instead"
-            )
-        if not from_html:
-            raise ValueError(
-                "from_html=False (pre-extracted text) has no python-direct "
-                "plan; pass the pages DataFrame instead of a parquet path"
-            )
         from ..sources.pages import read_pages_extracted_python
 
         pages = read_pages_extracted_python(
             spans.sparkSession, pages, columns=("url", "lang")
         )
-        return mentions_from_spans(pages, spans, broadcast_spans=broadcast_spans)
-    if from_html and "html" in pages.columns:
-        if jvm_extract:
-            from ..functions.text import extract_text_jvm
-
-            pages = pages.select(
-                "url", extract_text_jvm(F.col("html")).alias("text"), "lang"
-            )
-        else:
-            pages = (
-                with_extracted_text(pages)
-                .select("url", F.col("extracted_text").alias("text"), "lang")
-            )
+    elif "html" in pages.columns:
+        pages = (
+            with_extracted_text(pages)
+            .select("url", F.col("extracted_text").alias("text"), "lang")
+        )
     return mentions_from_spans(pages, spans, broadcast_spans=broadcast_spans)
 
 
@@ -203,10 +181,11 @@ def link(
 ) -> dict[str, DataFrame]:
     """Run the full pipeline. With a ``store``, every stage is resumable.
 
-    ``pages`` may be a parquet path (string) — the scan then uses the
-    python-direct row-group reader, the fastest measured plan on
-    parquet-backed pages at every parallelism level (see
-    ``build_mentions``). Pass a DataFrame for every other source.
+    ``pages`` selects the extraction plan (see ``build_mentions``): a
+    parquet path (string) uses the python-direct row-group reader, the
+    fastest measured plan on parquet-backed pages; a DataFrame (every
+    other source) uses the ``extract_text`` pandas_udf over ``html``, or
+    its ``text`` column when it has no ``html``.
 
     Returns dict with: mentions, pairs_mm, pairs_me, edges, clusters.
     cluster ids: min member id (entity anchors sort first via ENT:: prefix
@@ -240,12 +219,7 @@ def link(
 
     mentions = stage(
         "mentions",
-        lambda: build_mentions(
-            pages,
-            spans,
-            jvm_extract=cfg.jvm_extract,
-            broadcast_spans=cfg.broadcast_spans,
-        ),
+        lambda: build_mentions(pages, spans, broadcast_spans=cfg.broadcast_spans),
     )
     # Only (mention_id, norm) is consumed inside the pipeline (surfaces
     # are distinct norms; the cluster projection joins on norm keyed by

@@ -68,6 +68,14 @@ def mentions_from_spans(
     rows outgrow a broadcast, the scale path is co-partitioning/bucketing
     both tables by url instead — the default (False) keeps the shuffled
     sort-merge join Catalyst plans for that regime.
+
+    With ``broadcast_spans=True`` the span side is first coalesced to
+    max(4 × defaultParallelism, 16) partitions. A coalesce is narrow, so
+    it caps the parallelism of everything narrow upstream of it in the
+    spans plan: when spans come from a costly narrow computation (a UDF
+    or a parse per span row, rather than a scan or projection), that
+    work runs on at most that many tasks. Pass such spans with
+    ``broadcast_spans=False`` or materialize them first.
     """
     s = spans.select("url", "mention_id", "start", "end")
     if broadcast_spans:

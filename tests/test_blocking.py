@@ -19,6 +19,24 @@ def test_key_families_present(spark):
     assert sum(x.startswith("mh") for x in keys) == 4
 
 
+def test_record_keys_match_keyed_records(spark):
+    """The driver-local key expression yields exactly ``keyed_records``'
+    key set per record, so both engines block identically."""
+    from mix_blink_spark.operators.blocking import band_key_kernel
+    from mix_blink_spark.operators.localpairs import record_keys
+
+    norms = ["acme systems", "acme", "global dynamics corp", "zürich straße", "a", "x y x", ""]
+    recs = _recs(spark, [(f"r{i}", n) for i, n in enumerate(norms)])
+    got: dict = {}
+    for r in keyed_records(recs, "rid").collect():
+        got.setdefault(r["rid"], set()).add(r["key"])
+    band_keys = band_key_kernel()
+    for i, n in enumerate(norms):
+        want = record_keys(n, band_keys)
+        assert len(want) == len(set(want))
+        assert got[f"r{i}"] == set(want), n
+
+
 def test_typo_pair_recovered_by_lsh(spark):
     """First-token typo breaks tk:/st: keys; minhash bands must recover."""
     recs = _recs(spark, [("r1", "globax dynamics"), ("r2", "global dynamics")])

@@ -9,15 +9,20 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from mix_blink_spark.functions.embed import DIM, encode, make_encoder_udf
+from mix_blink_spark.functions.embed import DIM, encode, encode_matrix, make_encoder_udf
 
 
 def test_default_factory_equals_module_udf(spark):
-    df = spark.createDataFrame([("acme systems",), ("datum robotics",), (None,)], "s string")
-    a = [r["e"] for r in df.select(encode(F.col("s")).alias("e")).collect()]
-    b = [r["e"] for r in df.select(make_encoder_udf()(F.col("s")).alias("e")).collect()]
-    for x, y in zip(a, b):
-        assert x == y
+    """The ``encode`` UDF returns the driver-side ``encode_matrix`` rows
+    bit for bit (nulls fold to ""), which is what lets ``link`` encode
+    dimension-scale surfaces on the driver instead of in a UDF job."""
+    texts = ["acme systems", "datum robotics", None, ""]
+    df = spark.createDataFrame([(t,) for t in texts], "s string")
+    got = [r["e"] for r in df.select(encode(F.col("s")).alias("e")).collect()]
+    want = encode_matrix([t if t is not None else "" for t in texts])
+    assert len(got) == len(texts)
+    for x, y in zip(got, want):
+        assert np.array_equal(np.asarray(x, dtype=np.float32), y)
 
 
 def test_custom_batch_fn_drops_in(spark):

@@ -195,11 +195,6 @@ def test_link_parquet_path_parity(spark, tmp_path):
     cl_path = {(r["member"], r["cluster_id"]) for r in out_path["clusters"].collect()}
     assert cl_df == cl_path and len(cl_df) > 0
 
-    # jvm_extract is the JVM plan; combining it with a path input is a
-    # contradiction and must refuse, not silently fall back
-    with pytest.raises(ValueError, match="python-direct"):
-        link(spark, pq_dir, spans, ents, LinkConfig(jvm_extract=True))
-
 
 def test_rowemb_fused_parity_beyond_broadcast(spark):
     """broadcast_dense_limit=0 forces the join-the-vectors (row-embedding)

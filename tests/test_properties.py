@@ -10,7 +10,7 @@ from hypothesis import strategies as st
 from mix_blink_spark.functions.embed import encode_one
 from mix_blink_spark.functions.strsim import jaro, jaro_winkler
 from mix_blink_spark.functions.text import extract_text_str
-from mix_blink_spark.operators.blocking import _minhash_band_keys
+from mix_blink_spark.operators.blocking import _minhash_band_keys, band_key_kernel
 from mix_blink_spark.operators.cc import _unionfind_local
 
 texts = st.text(
@@ -52,6 +52,18 @@ def test_minhash_band_keys_stable(s):
     k1 = _minhash_band_keys(s, 4, 2, 4)
     k2 = _minhash_band_keys(s, 4, 2, 4)
     assert k1 == k2 and len(k1) == 4
+
+
+_SHARED_BAND_KEYS = band_key_kernel()  # one memo across every example
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.text(max_size=12) | st.sampled_from(["", "a", "ab", "acme corp", "zürich ñ"]))
+def test_band_key_kernel_matches_reference(s):
+    """The memoized kernel every blocking plan calls equals the readable
+    reference for any string (empty, shorter than the shingle, non-ASCII),
+    whether its memo is fresh or reused across many strings."""
+    assert _SHARED_BAND_KEYS(s) == band_key_kernel()(s) == _minhash_band_keys(s, 4, 2, 4)
 
 
 @settings(max_examples=100, deadline=None)

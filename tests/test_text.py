@@ -25,20 +25,6 @@ def test_extract_text_byte_identical(spark, corpus):
     assert mismatches == 0
 
 
-def test_jvm_extractor_matches_python_kernel(spark, corpus):
-    """The codegen fast path must agree byte-for-byte with the Python
-    kernel (and therefore with the stored text) on the fixture corpus."""
-    from mix_blink_spark.functions.text import extract_text_jvm
-
-    pages = corpus["pages"]
-    bad = (
-        pages.withColumn("jvm", extract_text_jvm(F.col("html")))
-        .filter((F.col("jvm") != F.col("text")))
-        .count()
-    )
-    assert bad == 0
-
-
 def test_extract_text_drops_boilerplate():
     html = (
         "<!DOCTYPE html><html><head><title>t</title><script>var x=1;</script></head>"
@@ -49,11 +35,10 @@ def test_extract_text_drops_boilerplate():
 
 
 def test_extract_text_nbsp_parity(spark):
-    """&nbsp; must decode to U+00A0 (html.unescape parity) in BOTH kernels
-    and must NOT be collapsed by the whitespace pass — the fixture corpus
-    never emits &nbsp;, so this case needs its own fixture (ADVICE r1)."""
-    from mix_blink_spark.functions.text import extract_text_jvm
-
+    """&nbsp; must decode to U+00A0 (html.unescape parity) in the Python
+    kernel and its pandas_udf, and must NOT be collapsed by the whitespace
+    pass — the fixture corpus never emits &nbsp;, so this case needs its
+    own fixture (ADVICE r1)."""
     html = (
         "<p>a&nbsp;b</p> <p>c &nbsp; d</p>"
         "<div>x&amp;y &lt;tag&gt; &quot;q&quot; &#39;s&#39;</div>"
@@ -63,11 +48,8 @@ def test_extract_text_nbsp_parity(spark):
     assert "c   d" in py
     assert "x&y <tag> \"q\" 's'" in py
     df = spark.createDataFrame([(html.encode(),)], "html binary")
-    row = df.select(
-        extract_text("html").alias("p"), extract_text_jvm(F.col("html")).alias("j")
-    ).first()
+    row = df.select(extract_text("html").alias("p")).first()
     assert row["p"] == py
-    assert row["j"] == py  # byte-identical across kernels
 
 
 def test_extract_text_null_safe(spark):
